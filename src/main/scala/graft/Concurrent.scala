@@ -10,9 +10,13 @@ package graft
   * write strictly after the group completes. */
 object Concurrent {
 
-  /** Run every thunk on its own thread; rethrow the first failure
-    * after all complete (so a failed component write can never be
-    * masked by a later successful one). */
+  /** Run every thunk on its own thread and join them ALL before
+    * returning or throwing: a failed component write can never be
+    * masked by a later successful one, and no writer thread outlives
+    * the call. The first failure is thrown with every other failure
+    * attached as suppressed. The joins are uninterruptible: an
+    * interrupt of the calling thread is re-asserted after the joins,
+    * not acted on while writers are still running. */
   def awaitAll(thunks: Seq[() => Unit]): Unit = {
     if (thunks.size <= 1) { thunks.foreach(_()); return }
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -23,7 +27,16 @@ object Concurrent {
       th.start()
       th
     }
-    ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    var interrupted = false
+    ts.foreach { th =>
+      while (th.isAlive)
+        try th.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
   }
 }

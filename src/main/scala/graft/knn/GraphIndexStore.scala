@@ -117,11 +117,22 @@ object GraphIndexStore {
       md5(concat(lit("smp|"), col("vec_id").cast("string"))), 1, 15), 16, 10)
       .cast("long"), lit(mod.toLong)) === 0)
 
-  private def fingerprintOf(pts: DataFrame): (Long, Long, Int) = {
+  /** (count, xor fingerprint, dim) of (vec_id, embedding) rows.
+    * `uniqueIds` also refuses repeated vec_ids — an upsert delta's
+    * entry contract, checked in the same aggregation: the delta's id
+    * set rides its one single-partition reduction (count_distinct
+    * would add a shuffle stage, i.e. one more job per upsert under
+    * AQE). The set is delta-sized: upserts are batches. */
+  private def fingerprintOf(pts: DataFrame,
+      uniqueIds: Boolean = false): (Long, Long, Int) = {
     val r = pts.agg(count(lit(1)),
       coalesce(bit_xor(xxhash64(col("vec_id"), col("embedding"))), lit(0L)),
-      coalesce(max(size(col("embedding"))), lit(0)).cast("int"))
+      coalesce(max(size(col("embedding"))), lit(0)).cast("int"),
+      if (uniqueIds) size(collect_set(col("vec_id"))).cast("long")
+      else count(lit(1)))
       .collect()(0)
+    require(r.getLong(0) == r.getLong(3),
+      s"delta repeats vec_ids: ${r.getLong(0)} rows, ${r.getLong(3)} distinct ids")
     (r.getLong(0), r.getLong(1), r.getInt(2))
   }
 
@@ -361,7 +372,9 @@ object GraphIndexStore {
     * add-after-train; entry quality degrades gracefully and a
     * maintenance pass re-trains — documented, not hidden). Duplicate
     * ids are REFUSED like [[graft.similarity.IvfIndexStore.upsert]]:
-    * the guard is one id-column scan of nodes/. The delta is VALIDATED
+    * the guard is one id-column scan of nodes/, and a vec_id repeated
+    * WITHIN the delta is refused by the delta-fingerprint aggregation
+    * (no extra job). The delta is VALIDATED
     * against the index's recorded parameters (round-13 advice): its
     * dimension must equal meta's `dim` and the caller's `k` must equal
     * meta's `k` — a smaller k would silently truncate every base
@@ -392,7 +405,7 @@ object GraphIndexStore {
       () => m = spark.read.parquet(s"$dir/meta").collect()(0),
       () => dupN = nodes.select(col("vec_id"))
         .join(pts.select(col("vec_id")), Seq("vec_id"), "left_semi").count(),
-      () => fp = fingerprintOf(pts)))
+      () => fp = fingerprintOf(pts, uniqueIds = true)))
     require(k == m.getAs[Int]("k"),
       s"upsert k=$k does not match the index's build k=${m.getAs[Int]("k")} " +
         "(a smaller k would silently truncate every stored adjacency list)")
@@ -481,7 +494,7 @@ object GraphIndexStore {
       () => m = spark.read.parquet(s"$dir/meta").collect()(0),
       () => dupN = nodes.select(col("vec_id"))
         .join(pts.select(col("vec_id")), Seq("vec_id"), "left_semi").count(),
-      () => fp = fingerprintOf(pts)))
+      () => fp = fingerprintOf(pts, uniqueIds = true)))
     val k = m.getAs[Int]("k")
     require(dupN == 0L,
       s"ingest requires disjoint vec_ids: $dupN already indexed")

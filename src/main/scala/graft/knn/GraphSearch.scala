@@ -223,7 +223,7 @@ object GraphSearch {
     * persistable next to the router like IVF lists. */
   def clusterSeeds(vectors: DataFrame, cent: DataFrame,
       seedsPerList: Int): DataFrame =
-    graft.similarity.IvfIndexStore.assignIdsToCentroids(
+    graft.similarity.Ann.assignToCentroids(
         vectors.select(col("vec_id"), col("embedding")), cent)
       .withColumn("hk", conv(substring(
         md5(concat(lit("gs|"), col("vec_id").cast("string"))), 1, 15), 16, 10)
@@ -251,7 +251,7 @@ object GraphSearch {
       s, sfDir, centKey, nlist, iters)(
       GraphIndexStore.trainSample(
         corpus.select(col("vec_id"), col("embedding")), mod))
-    // seed assignment = one broadcast-argmin + a bounded window —
+    // seed assignment = one codegen argmin projection + a bounded window —
     // same iterative-build scoping as the training (round-15)
     val cseeds = graft.Tuning.withIterativeBuild(s) {
       graft.Materialized.table(s, sfDir,

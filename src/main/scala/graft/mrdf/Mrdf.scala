@@ -23,8 +23,11 @@ import graft.linalg.Distances
   *  - centroid sampling is a deterministic per-path bottom-ρ by
   *    xxhash64(seed, iter, id) — order-independent, cluster-safe,
   *    replacing the reference's driver-side reservoir;
-  *  - nearest-centroid assignment is a broadcast join + per-id argmin
-  *    window (the centroid set is ≤ ρ × #oversized-paths rows);
+  *  - nearest-centroid assignment is one codegen projection
+  *    (`NearestCentroidIdx`) over a driver-held path→centroids map
+  *    while the sample fits `driverSampleBytes`, else a join + per-id
+  *    min(struct) over the distributed centroid table (≤ ρ ×
+  *    #oversized-paths rows);
   *  - block-local NN-Descent runs inside `flatMapGroups` per path —
   *    blocks ≤ α by construction, so they fit an executor, and all
   *    blocks run in parallel (the reference collected every block to

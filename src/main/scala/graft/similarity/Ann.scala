@@ -2,9 +2,11 @@ package graft.similarity
 
 import scala.util.Random
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.VectorExpressions
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.linalg.Distances
 
@@ -72,49 +74,95 @@ object Ann {
     rerank(cands, k)
   }
 
+  /** The (cid, cvec) centroid table on the driver, sorted by cid.
+    * BOUNDED by construction: a coarse quantizer is nlist rows (8 at
+    * test SFs, 1024 in the 1M sweep) — the same a-priori-bounded driver
+    * transfer as MRDF's smallLevel arm, and how FAISS-family systems
+    * hold the coarse quantizer. */
+  private[graft] def collectCentroids(cent: DataFrame): Array[(Int, Array[Float])] =
+    cent.select(col("cid"), col("cvec")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
+
+  /** The cid of `vec`'s nearest centroid in its group's cid-sorted
+    * table: `grp` (a string column) picks the table in `groups`; a
+    * single table is the group "". This is the ONE nearest-centroid
+    * decision behind every k-means consumer (Lloyd's rounds, IVF
+    * lists, cluster seeds, SemDeDup, the q191 stream route, PQ
+    * codebook training). [[org.apache.spark.sql.graft.NearestCentroidIdx]]
+    * loops the centroid array inside whole-stage codegen: no join, no
+    * aggregation, no shuffle, no interpreted lambda. It computes the
+    * same strict-fold Euclidean doubles as [[Distances.euclidean]], and
+    * its first-wins rule over the cid-sorted array is the (d, cid)
+    * tie-break every portable oracle replays (asserted in PlanSpecs).
+    * Tables must be non-empty. */
+  private[graft] def nearestCid(
+      groups: Map[String, Array[(Int, Array[Float])]], vec: Column,
+      grp: Column): Column = {
+    val cmap = new java.util.HashMap[UTF8String, Array[Array[Float]]]()
+    groups.foreach { case (g, cents) =>
+      cmap.put(UTF8String.fromString(g), cents.map(_._2))
+    }
+    val idx = VectorExpressions.nearestCentroidIdx(cmap, vec, grp)
+    val cids = groups.map { case (g, cents) => g -> cents.map(_._1).toSeq }
+    element_at(element_at(typedlit(cids), grp), idx + 1)
+  }
+
+  /** `pts` with its nearest centroid's `cid` prepended — one narrow
+    * projection, one output row per input row (callers own the
+    * unique-id contract). No centroids ⇒ no rows. */
+  private[graft] def assignToCentroids(pts: DataFrame,
+      cents: Array[(Int, Array[Float])], vecCol: String): DataFrame = {
+    val keep = pts.columns.toSeq.map(col)
+    if (cents.isEmpty) pts.filter(lit(false)).select(lit(0).as("cid") +: keep: _*)
+    else pts.select(
+      nearestCid(Map("" -> cents), col(vecCol), lit("")).as("cid") +: keep: _*)
+  }
+
+  /** [[assignToCentroids]] of (vec_id, embedding) points against a
+    * centroid table: (cid, vec_id, embedding). */
+  private[graft] def assignToCentroids(pts: DataFrame, cent: DataFrame): DataFrame =
+    assignToCentroids(pts, collectCentroids(cent), "embedding")
+
+  /** A driver-side centroid table as a (cid INT, cvec ARRAY<FLOAT>)
+    * local relation. */
+  private def centroidFrame(spark: SparkSession,
+      cents: Array[(Int, Array[Float])]): DataFrame =
+    spark.createDataFrame(cents.toSeq.map { case (c, v) => (c, v.toSeq) })
+      .toDF("cid", "cvec")
+
+  /** Init centroids: the first `k` points in `rank` order, cid = rank
+    * position — a distributed TakeOrdered, k rows to the driver. */
+  private def initCentroids(pts: DataFrame, k: Int,
+      rank: Column): Array[(Int, Array[Float])] =
+    pts.orderBy(rank, col("id")).limit(k).select(col("vec")).collect()
+      .zipWithIndex.map { case (r, i) => (i, r.getSeq[Float](0).toArray) }
+
   /** Distributed Lloyd's k-means — the IVF coarse quantizer. Seeded
-    * deterministic init (bottom-k by hash, the same order-independent
-    * sampler as MRDF's centroid pick); each round is one broadcast
-    * argmin join + one per-(cluster, dim) mean. Centroid tables are k
-    * rows — driver-free and broadcast-sized at any data scale. */
+    * deterministic init (bottom-k by xxhash64, the same
+    * order-independent sampler as MRDF's centroid pick). A DRIVER loop:
+    * each round assigns with one narrow [[nearestCid]] projection and
+    * takes one per-(cluster, dim) mean; the k-row result comes back to
+    * the driver for the next round. Returns the final (cid, cvec)
+    * table as a local relation. */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int = 5, seed: Long = 42L,
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val pts = emb.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    // orderBy+limit is a distributed TakeOrdered; the (unpartitioned)
-    // row_number window then only ever sees k rows
-    // LAZY localCheckpoint chain (round-14): every round's plan sees a
-    // truncated LogicalRDD leaf, but the eager variant paid one
-    // driver-synced job per round (iters+1 jobs of latency per
-    // training); the lazy chain materializes every round inside the
-    // consumer's single action. Superseded rounds' blocks (k rows
-    // each) are released by the harness sweep after the action.
-    var cent = pts
-      .withColumn("h", xxhash64(lit(seed), col("id")))
-      .orderBy(col("h"), col("id")).limit(k)
-      .withColumn("cid", row_number().over(
-        Window.orderBy(col("h"), col("id"))) - 1)
-      .select(col("cid"), col("vec").as("cvec"))
-      .localCheckpoint(eager = false)
-    (1 to iters).foreach { _ =>
-      // argmin as min(struct(d, cid, vec)): map-side partial agg → one
-      // row per point crosses the shuffle, vs N×k for a window argmin
-      val assigned = pts.join(broadcast(cent))
-        .select(col("id"), struct(
-          Distances.euclidean(col("vec"), col("cvec")).as("d"),
-          col("cid").as("cid"), col("vec").as("vec")).as("cand"))
-        .groupBy(col("id")).agg(min(col("cand")).as("m"))
-        .select(col("m.cid").as("cid"), col("m.vec").as("vec"))
-      cent = assigned
-        .select(col("cid"), posexplode(col("vec")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(avg(col("x")).as("m"))
-        .groupBy(col("cid"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("s"))
-        .select(col("cid"), transform(col("s"), e => e("m").cast("float")).as("cvec"))
-        .localCheckpoint(eager = false)
-    }
-    cent
+    var cents = initCentroids(pts, k, xxhash64(lit(seed), col("id")))
+    (1 to iters).foreach { _ => cents = collectCentroids(kmeansRound(pts, cents)) }
+    centroidFrame(emb.sparkSession, cents)
   }
+
+  /** One [[kmeansCentroids]] round over (id, vec) points: assign, then
+    * the order-free per-(cid, pos) `avg`. */
+  private[graft] def kmeansRound(pts: DataFrame,
+      cents: Array[(Int, Array[Float])]): DataFrame =
+    assignToCentroids(pts, cents, "vec")
+      .select(col("cid"), posexplode(col("vec")).as(Seq("pos", "x")))
+      .groupBy(col("cid"), col("pos"))
+      .agg(avg(col("x")).as("m"))
+      .groupBy(col("cid"))
+      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("s"))
+      .select(col("cid"), transform(col("s"), e => e("m").cast("float")).as("cvec"))
 
   /** Cross-engine-exact distributed Lloyd's — [[kmeansCentroids]]'
     * oracle-mirrorable twin (the generated-mirror doctrine applied to
@@ -124,69 +172,51 @@ object Ann {
     * id order — `avg`'s partial aggregation is order-free and thus not
     * bit-reproducible across engines. Every argmin ties on (d, cid).
     * [[kmeansCentroids]] (xxhash init, plain avg — the order-free
-    * shapes you want at 100 TB) remains the scale path. */
+    * shapes you want at 100 TB) remains the scale path. Same driver
+    * loop as [[kmeansCentroids]]; ids must be unique. */
   def kmeansCentroidsPortable(emb: DataFrame, k: Int, iters: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val pts = emb.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    // PACKED single-row rounds (round-15, guide §2/§5): the training
-    // corpus is bounded (the TrainTargetN sample rule) and the centroid
-    // table is k rows, yet the unpacked loop paid THREE shuffles per
-    // round (argmin groupBy(id), mean groupBy(cid,pos), repack
-    // groupBy(cid)) — ~18 shuffle stages of pure scheduling latency per
-    // training at any scale. Each round is now ONE global aggregation:
-    // centroids ride in a single packed row (cents: array<struct<cid,
-    // cvec>>), the argmin is a narrow broadcast projection over the
-    // point scan, and the member-sorted mean folds run as HOFs inside
-    // the aggregated row. Every numeric shape is IDENTICAL to the
-    // unpacked form (and thus to the DuckDB oracle texts): same md5
-    // bottom-k init ordered by (hk, id), same (d, cid) argmin
-    // tie-break, same sequential CAST-to-DOUBLE fold over members in
-    // id order per dim, same double/count division, same final FLOAT
-    // cast. LAZY localCheckpoint chain per round as before (round-14):
-    // all rounds execute inside the consumer's one action.
-    def packedMeans(assigned: DataFrame): DataFrame =
-      assigned
-        .agg(array_sort(collect_list(
-          struct(col("cid"), col("id"), col("vec")))).as("all"))
-        // `all` is sorted by (cid, id): cids come out ascending and
-        // each filtered group keeps id order — the fold order the
-        // oracle replays
-        .select(col("all"),
-          array_distinct(transform(col("all"), e => e.getField("cid")))
-            .as("cids"))
-        .select(col("cids"),
-          transform(col("cids"),
-            c => filter(col("all"), e => e.getField("cid") === c))
-            .as("groups"))
-        .select(zip_with(col("cids"), col("groups"), (c, g) =>
-          struct(c.as("cid"),
-            transform(
-              sequence(lit(0), size(element_at(g, 1).getField("vec")) - 1),
-              pos => (aggregate(g, lit(0.0), (acc, e) =>
-                acc + element_at(e.getField("vec"), pos + 1).cast("double"))
-                / size(g)).cast("float")).as("cvec"))).as("cents"))
-    var cent = pts
-      .withColumn("hk", conv(substring(
-        md5(concat(lit("km|"), col("id").cast("string"))), 1, 15), 16, 10)
-        .cast("long"))
-      .agg(array_sort(collect_list(
-        struct(col("hk"), col("id"), col("vec")))).as("all"))
-      .select(slice(col("all"), 1, k).as("top"))
-      .select(transform(col("top"), (e, i) =>
-        struct(i.cast("int").as("cid"), e.getField("vec").as("cvec")))
-        .as("cents"))
-      .localCheckpoint(eager = false)
+    var cents = initCentroids(pts, k, conv(substring(
+      md5(concat(lit("km|"), col("id").cast("string"))), 1, 15), 16, 10)
+      .cast("long"))
     (1 to iters).foreach { _ =>
-      val assigned = pts.crossJoin(broadcast(cent))
-        .select(col("id"), col("vec"),
-          array_min(transform(col("cents"), c => struct(
-            Distances.euclidean(col("vec"), c.getField("cvec")).as("d"),
-            c.getField("cid").as("cid")))).getField("cid").as("cid"))
-      cent = packedMeans(assigned).localCheckpoint(eager = false)
+      cents = kmeansPortableRound(pts, cents).collect()(0).getSeq[Row](0)
+        .map(c => (c.getInt(0), c.getSeq[Float](1).toArray)).toArray
     }
-    cent.select(explode(col("cents")).as("c"))
-      .select(col("c.cid").as("cid"), col("c.cvec").as("cvec"))
+    centroidFrame(emb.sparkSession, cents)
   }
+
+  /** One [[kmeansCentroidsPortable]] round over (id, vec) points: the
+    * narrow assignment, then ONE global aggregation (round-15, guide
+    * §2/§5: the training corpus is bounded by the TrainTargetN sample
+    * rule) whose single row `cents: array<struct<cid, cvec>>` holds
+    * the member-sorted mean folds. Every numeric shape matches the
+    * DuckDB oracle texts: same (d, cid) argmin tie-break, same
+    * sequential CAST-to-DOUBLE fold over members in id order per dim,
+    * same double/count division, same final FLOAT cast. */
+  private[graft] def kmeansPortableRound(pts: DataFrame,
+      cents: Array[(Int, Array[Float])]): DataFrame =
+    assignToCentroids(pts, cents, "vec")
+      .agg(array_sort(collect_list(
+        struct(col("cid"), col("id"), col("vec")))).as("all"))
+      // `all` is sorted by (cid, id): cids come out ascending and
+      // each filtered group keeps id order — the fold order the
+      // oracle replays
+      .select(col("all"),
+        array_distinct(transform(col("all"), e => e.getField("cid")))
+          .as("cids"))
+      .select(col("cids"),
+        transform(col("cids"),
+          c => filter(col("all"), e => e.getField("cid") === c))
+          .as("groups"))
+      .select(zip_with(col("cids"), col("groups"), (c, g) =>
+        struct(c.as("cid"),
+          transform(
+            sequence(lit(0), size(element_at(g, 1).getField("vec")) - 1),
+            pos => (aggregate(g, lit(0.0), (acc, e) =>
+              acc + element_at(e.getField("vec"), pos + 1).cast("double"))
+              / size(g)).cast("float")).as("cvec"))).as("cents"))
 
   /** Per-(process, sfDir) MATERIALIZED portable router (round-14
     * optimization): several declared queries train the IDENTICAL
@@ -215,49 +245,43 @@ object Ann {
 
   /** [[ivfKmeansTopK]] over the portable quantizer — the variant the
     * q175 oracle replays end to end (init, every Lloyd's round, list
-    * assignment, probes, exact re-rank). `cent` supplies a precomputed
+    * assignment, probes, exact re-rank). `cent0` supplies a precomputed
     * router (it must equal `kmeansCentroidsPortable(emb, nlist,
-    * kmeansIters)` — the [[sharedPortableCentroids]] hook). */
+    * kmeansIters)` — the [[sharedPortableCentroids]] hook). Same
+    * unique-`vec_id` contract as [[ivfKmeansTopK]]. */
   def ivfKmeansTopKPortable(emb: DataFrame, k: Int, queryPred: Column,
       nlist: Int = 8, nprobe: Int = 3, kmeansIters: Int = 5,
-      cent0: Option[DataFrame] = None): DataFrame = {
-    val cent = cent0.getOrElse(kmeansCentroidsPortable(emb, nlist, kmeansIters))
-    val pts = emb.select(col("vec_id").as("nbr"), col("embedding").as("cv"))
-    val lists = pts.join(broadcast(cent))
-      .select(col("nbr"), struct(
-        Distances.euclidean(col("cv"), col("cvec")).as("d"),
-        col("cid").as("cid"), col("cv").as("cv")).as("cand"))
-      .groupBy(col("nbr")).agg(min(col("cand")).as("m"))
-      .select(col("m.cid").as("cid"), col("nbr"), col("m.cv").as("cv"))
-    val q = emb.filter(queryPred)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val probes = q.join(broadcast(cent))
-      .withColumn("cd", Distances.euclidean(col("qv"), col("cvec")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cd"), col("cid"))))
-      .filter(col("pr") <= nprobe)
-      .select(col("qid"), col("qv"), col("cid"))
-    val cands = probes.join(lists, Seq("cid"))
-      .filter(col("qid") =!= col("nbr"))
-      .select(col("qid"), col("qv"), col("nbr"), col("cv"))
-    rerank(cands, k)
-  }
+      cent0: Option[DataFrame] = None): DataFrame =
+    ivfTopKOver(emb,
+      cent0.getOrElse(kmeansCentroidsPortable(emb, nlist, kmeansIters)),
+      k, queryPred, nprobe)
 
   /** IVF with the k-means quantizer: build inverted lists by nearest
-    * centroid, probe the nprobe nearest lists per query, exact re-rank. */
+    * centroid, probe the nprobe nearest lists per query, exact re-rank.
+    * `emb`'s `vec_id`s must be unique: every row lands in exactly one
+    * list, so a repeated id is a repeated neighbor. */
   def ivfKmeansTopK(emb: DataFrame, k: Int, queryPred: Column,
                     nlist: Int = 16, nprobe: Int = 4, kmeansIters: Int = 5,
-                    seed: Long = 42L): DataFrame = {
-    val cent = kmeansCentroids(emb, nlist, kmeansIters, seed)
-    val pts = emb.select(col("vec_id").as("nbr"), col("embedding").as("cv"))
-    val lists = pts.join(broadcast(cent))
-      .select(col("nbr"), struct(
-        Distances.euclidean(col("cv"), col("cvec")).as("d"),
-        col("cid").as("cid"), col("cv").as("cv")).as("cand"))
-      .groupBy(col("nbr")).agg(min(col("cand")).as("m"))
-      .select(col("m.cid").as("cid"), col("nbr"), col("m.cv").as("cv"))
-    val q = emb.filter(queryPred)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+                    seed: Long = 42L): DataFrame =
+    ivfTopKOver(emb, kmeansCentroids(emb, nlist, kmeansIters, seed),
+      k, queryPred, nprobe)
+
+  private def ivfTopKOver(emb: DataFrame, cent: DataFrame, k: Int,
+      queryPred: Column, nprobe: Int): DataFrame =
+    probeLists(emb.filter(queryPred)
+        .select(col("vec_id").as("qid"), col("embedding").as("qv")),
+      cent, ivfLists(emb, cent), k, nprobe)
+
+  /** Inverted lists (cid, nbr, cv): every (vec_id, embedding) row in
+    * its nearest centroid's list. */
+  private[graft] def ivfLists(emb: DataFrame, cent: DataFrame): DataFrame =
+    assignToCentroids(emb.select(col("vec_id"), col("embedding")), cent)
+      .select(col("cid"), col("vec_id").as("nbr"), col("embedding").as("cv"))
+
+  /** IVF search over (qid, qv) queries: probe each query's `nprobe`
+    * nearest lists (ties on (d, cid)), exact re-rank of their members. */
+  private[similarity] def probeLists(q: DataFrame, cent: DataFrame,
+      lists: DataFrame, k: Int, nprobe: Int): DataFrame = {
     val probes = q.join(broadcast(cent))
       .withColumn("cd", Distances.euclidean(col("qv"), col("cvec")))
       .withColumn("pr", row_number().over(

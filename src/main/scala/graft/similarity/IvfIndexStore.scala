@@ -3,11 +3,9 @@ package graft.similarity
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Declared, Tables}
-import graft.linalg.Distances
 
 /** Persistent ANN index: the portable IVF quantizer written as parquet
   * artifacts and served back WITHOUT the training corpus — the
@@ -30,68 +28,16 @@ import graft.linalg.Distances
   * q175's in-memory pipeline — floats round-trip parquet bit-exactly,
   * so the persisted search must hash-match the never-persisted one.
   *
-  * Scale shape: build = one broadcast-argmin assignment over the
-  * corpus + the k-means rounds (both the q36b/q175 shapes); the lists
-  * sink partitions by cid naturally; search broadcasts the nlist-row
+  * Scale shape: build = the k-means rounds + one narrow
+  * nearest-centroid projection over the corpus
+  * ([[Ann.assignToCentroids]]); the lists sink partitions by cid
+  * naturally; search broadcasts the nlist-row
   * centroid table, probes explode to nprobe equi-join keys against
   * the lists, and the re-rank is the TopKByWeight partial aggregation
   * (≤ k rows per query cross the shuffle). */
 object IvfIndexStore {
 
   private val K = 10
-
-  /** Nearest-centroid assignment of (vec_id, embedding) points — the
-    * broadcast argmin-as-min(struct) shape shared by build, upsert and
-    * list splits: the centroid table broadcasts (≤ nlist rows), the
-    * per-point reduction is a map-side-combined aggregation, so ONE
-    * row per point crosses the shuffle, never N×nlist (plan-gated). */
-  /** The centroid table as a driver-local argmin payload. BOUNDED by
-    * construction: the coarse quantizer is nlist rows (8 at test SFs,
-    * 1024 in the 1M sweep) — the same a-priori-bounded driver transfer
-    * as MRDF's smallLevel arm, and exactly how FAISS-family systems
-    * hold the coarse quantizer. Rows sorted by cid so the expression's
-    * first-wins tie rule equals the min(struct(d, cid)) tie-break. */
-  private def centArgminPayload(cent: DataFrame)
-      : (Seq[Int], java.util.HashMap[
-        org.apache.spark.unsafe.types.UTF8String, Array[Array[Float]]]) = {
-    val rows = cent.select(col("cid"), col("cvec")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-    val cmap = new java.util.HashMap[
-      org.apache.spark.unsafe.types.UTF8String, Array[Array[Float]]]()
-    cmap.put(org.apache.spark.unsafe.types.UTF8String.fromString(""),
-      rows.map(_._2))
-    (rows.map(_._1).toSeq, cmap)
-  }
-
-  /** Nearest-centroid assignment as ONE narrow codegen projection —
-    * round-15, measured at 1M×1024 (GraphIndexScale): the former
-    * broadcast-join + per-id argmin aggregation streamed N×nlist
-    * candidate rows (cluster_seeds 851.8 s of a 937.5 s index write
-    * with the vector inside each candidate struct; 471.7 s with the
-    * struct narrowed to (d, cid)). [[org.apache.spark.sql.graft.NearestCentroidIdx]]
-    * loops the bounded centroid array inside codegen instead — no
-    * join, no aggregation, no shuffle. Assignments are bit-identical:
-    * the expression computes the same strict-fold Euclidean doubles as
-    * [[Distances.euclidean]] and its first-wins-on-tie rule over the
-    * cid-sorted array equals the min(struct(d, cid)) tie-break (the
-    * MRDF divide-arm equivalence, asserted in PlanSpecs). */
-  private[graft] def assignToCentroids(pts: DataFrame,
-      cent: DataFrame): DataFrame = {
-    val (cids, cmap) = centArgminPayload(cent)
-    if (cids.isEmpty)
-      return pts.filter(lit(false))
-        .select(lit(0).as("cid"), col("vec_id"), col("embedding"))
-    val idx = org.apache.spark.sql.graft.VectorExpressions
-      .nearestCentroidIdx(cmap, col("embedding"), lit(""))
-    pts.select(element_at(typedlit(cids), idx + 1).as("cid"),
-      col("vec_id"), col("embedding"))
-  }
-
-  /** [[assignToCentroids]] when the caller needs only (cid, vec_id) —
-    * the cluster-seeds build. */
-  private[graft] def assignIdsToCentroids(pts: DataFrame,
-      cent: DataFrame): DataFrame =
-    assignToCentroids(pts, cent).select(col("cid"), col("vec_id"))
 
   /** Build the portable IVF index over `emb` and write it under `dir`.
     * Deterministic for a given corpus (md5 bottom-k init, ordered-fold
@@ -106,7 +52,7 @@ object IvfIndexStore {
     val cent = trainedCent.getOrElse(
       Ann.kmeansCentroidsPortable(emb, nlist, kmeansIters))
     val pts = emb.select(col("vec_id"), col("embedding"))
-    val lists = assignToCentroids(pts, cent)
+    val lists = Ann.assignToCentroids(pts, cent)
     // coalesce: bit_xor over zero rows is NULL — an empty corpus must
     // produce a definite (0-row, fingerprint 0) index, not a null meta
     // that makes isFreshFor throw later (round-11 advice).
@@ -143,20 +89,11 @@ object IvfIndexStore {
     * [[Ann.ivfKmeansTopKPortable]]. Reads only the index dir. */
   def search(spark: SparkSession, dir: String, queries: DataFrame,
              k: Int = K, nprobe: Int = 3): DataFrame = {
-    val cent = spark.read.parquet(s"$dir/centroids")
     val lists = spark.read.parquet(s"$dir/lists")
       .select(col("cid"), col("vec_id").as("nbr"), col("embedding").as("cv"))
-    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val probes = q.join(broadcast(cent))
-      .withColumn("cd", Distances.euclidean(col("qv"), col("cvec")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cd"), col("cid"))))
-      .filter(col("pr") <= nprobe)
-      .select(col("qid"), col("qv"), col("cid"))
-    val cands = probes.join(lists, Seq("cid"))
-      .filter(col("qid") =!= col("nbr"))
-      .select(col("qid"), col("qv"), col("nbr"), col("cv"))
-    Ann.rerank(cands, k)
+    Ann.probeLists(
+      queries.select(col("vec_id").as("qid"), col("embedding").as("qv")),
+      spark.read.parquet(s"$dir/centroids"), lists, k, nprobe)
   }
 
   /** Full persisted cycle for the declared row: build → write → load →
@@ -218,10 +155,14 @@ object IvfIndexStore {
     * the FAISS `add` contract. The guard costs one id-column scan of
     * lists/ (a single pruned Long column, not a corpus rescan).
     *
-    * Scale shape: one broadcast-argmin pass over delta only (base
-    * vectors are never re-read — the whole point), an append write
-    * partitioned like the original lists, and a single-row meta
-    * rewrite. */
+    * `delta`'s vec_ids must be unique: a repeated id is refused before
+    * anything is written (checked in the delta-fingerprint aggregation,
+    * no extra job).
+    *
+    * Scale shape: one narrow nearest-centroid projection over delta
+    * only (base vectors are never re-read — the whole point), an
+    * append write partitioned like the original lists, and a
+    * single-row meta rewrite. */
   def upsert(spark: SparkSession, dir: String, delta: DataFrame,
              maxListSize: Long = 0L): Unit = {
     val cent = spark.read.parquet(s"$dir/centroids")
@@ -236,13 +177,19 @@ object IvfIndexStore {
       () => dupN = spark.read.parquet(s"$dir/lists").select(col("vec_id"))
         .join(pts.select(col("vec_id")), Seq("vec_id"), "left_semi").count(),
       () => d = pts.agg(count(lit(1)),
-        coalesce(bit_xor(xxhash64(col("vec_id"), col("embedding"))), lit(0L)))
+        coalesce(bit_xor(xxhash64(col("vec_id"), col("embedding"))), lit(0L)),
+        // the id set shares the one single-partition reduction, as in
+        // GraphIndexStore.fingerprintOf: no extra shuffle stage or job
+        size(collect_set(col("vec_id"))).cast("long"))
         .collect()(0),
       () => m = spark.read.parquet(s"$dir/meta").collect()(0)))
+    require(d.getLong(0) == d.getLong(2),
+      s"upsert delta repeats vec_ids: ${d.getLong(0)} rows, " +
+        s"${d.getLong(2)} distinct ids")
     require(dupN == 0L,
       s"upsert requires disjoint vec_ids: $dupN already indexed " +
         "(insert-only contract; updates need delete+insert)")
-    assignToCentroids(pts, cent).write.mode("append").parquet(s"$dir/lists")
+    Ann.assignToCentroids(pts, cent).write.mode("append").parquet(s"$dir/lists")
     import spark.implicits._
     Seq((m.getAs[Long]("n_vectors") + d.getLong(0), m.getAs[Int]("dim"),
         m.getAs[Int]("nlist"), m.getAs[Int]("kmeans_iters"),
@@ -322,7 +269,7 @@ object IvfIndexStore {
         .select(col("vec_id"), col("embedding"))
       val sub = Ann.kmeansCentroidsPortable(members, 2, iters = 3)
         .withColumn("cid", col("cid") + lit(nextCid))
-      keepLists = keepLists.unionByName(assignToCentroids(members, sub))
+      keepLists = keepLists.unionByName(Ann.assignToCentroids(members, sub))
       keepCent = keepCent.unionByName(sub.select(col("cid"), col("cvec")))
       nextCid += 2
     }

@@ -15,10 +15,11 @@ import graft.linalg.Distances
   *
   * Scale design (the part that matters at 100 TB):
   *  - Training: ONE grouped Lloyd's loop trains all `m` subspace
-  *    codebooks simultaneously — per-iteration cost is one broadcast
-  *    join + one partial-agg shuffle over the subvector table,
-  *    independent of `m` (m sequential k-means runs would scan the
-  *    data m× per round).
+  *    codebooks simultaneously — per-iteration cost is one narrow
+  *    nearest-centroid projection (the m·ks-row codebook rides in
+  *    [[Ann.nearestCid]], keyed by subspace) + one mean shuffle over
+  *    the subvector table, independent of `m` (m sequential k-means
+  *    runs would scan the data m× per round).
   *  - The trained codebook is m·ks rows (64 here) — a driver-side
   *    scalar in the same legitimacy class as a k-means centroid
   *    broadcast; it becomes LITERALS in the encode expression.
@@ -41,7 +42,7 @@ object Pq {
   /** Grouped distributed Lloyd's: trains an independent k-means per
     * `grp` over `(grp, id, vec)` points, all groups in the same rounds.
     * Init is the order-independent bottom-k-by-hash per group (the
-    * MRDF/IVF sampler); each round is one broadcast argmin join + one
+    * MRDF/IVF sampler); each round is one narrow [[assign]] + one
     * per-(grp, cid, dim) mean. Returns (grp, cid, cvec). */
   def groupedKmeans(pts: DataFrame, k: Int, iters: Int = 5,
                     seed: Long = 42L): DataFrame = {
@@ -58,13 +59,7 @@ object Pq {
       .select(col("grp"), col("cid"), col("vec").as("cvec"))
       .localCheckpoint()
     (1 to iters).foreach { _ =>
-      val assigned = pts.join(broadcast(cent), Seq("grp"))
-        .select(col("grp"), col("id"), struct(
-          Distances.euclidean(col("vec"), col("cvec")).as("d"),
-          col("cid").as("cid"), col("vec").as("vec")).as("cand"))
-        .groupBy(col("grp"), col("id")).agg(min(col("cand")).as("m"))
-        .select(col("grp"), col("m.cid").as("cid"), col("m.vec").as("vec"))
-      val moved = assigned
+      val moved = assign(pts, cent)
         .select(col("grp"), col("cid"), posexplode(col("vec")).as(Seq("pos", "x")))
         .groupBy(col("grp"), col("cid"), col("pos"))
         .agg(avg(col("x")).as("mn"))
@@ -86,6 +81,18 @@ object Pq {
       cent = next
     }
     cent
+  }
+
+  /** (grp, id, vec) points with their own subspace's nearest `cid`
+    * prepended: the (grp, cid, cvec) table (m·ks rows, checkpointed)
+    * comes to the driver, one codegen argmin per point. */
+  private def assign(pts: DataFrame, cent: DataFrame): DataFrame = {
+    val books = cent.select(col("grp").cast("string"), col("cid"), col("cvec"))
+      .collect().groupBy(_.getString(0)).map { case (g, rs) =>
+        g -> rs.map(r => (r.getInt(1), r.getSeq[Float](2).toArray)).sortBy(_._1)
+      }
+    pts.select(Ann.nearestCid(books, col("vec"), col("grp").cast("string"))
+      .as("cid") +: pts.columns.toSeq.map(col): _*)
   }
 
   /** (grp, id, vec) subvector table: vector j-th slice under group j. */
@@ -161,13 +168,7 @@ object Pq {
       .select(col("grp"), col("cid"), col("vec").as("cvec"))
       .localCheckpoint()
     (1 to iters).foreach { _ =>
-      val assigned = pts.join(broadcast(cent), Seq("grp"))
-        .select(col("grp"), col("id"), struct(
-          Distances.euclidean(col("vec"), col("cvec")).as("d"),
-          col("cid").as("cid"), col("vec").as("vec")).as("cand"))
-        .groupBy(col("grp"), col("id")).agg(min(col("cand")).as("m"))
-        .select(col("grp"), col("id"), col("m.cid").as("cid"), col("m.vec").as("vec"))
-      val moved = assigned
+      val moved = assign(pts, cent)
         .select(col("grp"), col("cid"), col("id"),
           posexplode(col("vec")).as(Seq("pos", "x")))
         .groupBy(col("grp"), col("cid"), col("pos"))

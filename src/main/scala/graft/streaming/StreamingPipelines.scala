@@ -951,11 +951,11 @@ object StreamingPipelines {
     * over the rest of the corpus), and each arrival is routed and
     * matched entirely without streaming state:
     *
-    *  - nearest-centroid routing is a MAP-SIDE fold over the centroid
-    *    table embedded as an array literal (nlist × dim floats — the
-    *    broadcast-dimension scale, collected once from the seeded
-    *    quantizer build), so no aggregation or window touches the
-    *    stream — append mode needs no watermark;
+    *  - nearest-centroid routing is one narrow codegen projection
+    *    ([[graft.similarity.Ann.nearestCid]]) over the nlist-row
+    *    centroid table collected once from the seeded quantizer
+    *    build, so no aggregation or window touches the stream —
+    *    append mode needs no watermark;
     *  - candidates come from ONE stream-static equi-join on the list
     *    id; similarity is rounded row-locally before the sink.
     *
@@ -970,18 +970,7 @@ object StreamingPipelines {
     val static = emb.filter(col("vec_id") % 10 =!= 0)
     val cent = graft.similarity.Ann
       .kmeansCentroidsPortable(static, nlist, kmeansIters)
-    val centRows = cent.orderBy(col("cid")).collect()
-    val centArr = array(centRows.map { r =>
-      struct(lit(r.getInt(0)).as("cid"),
-        array(r.getSeq[Float](1).map(lit(_)): _*).as("cvec"))
-    }: _*)
-    val lists = static.select(col("vec_id").as("nbr"), col("embedding").as("cv"))
-      .join(broadcast(cent))
-      .select(col("nbr"), struct(
-        graft.linalg.Distances.euclidean(col("cv"), col("cvec")).as("d"),
-        col("cid").as("cid"), col("cv").as("cv")).as("cand"))
-      .groupBy(col("nbr")).agg(min(col("cand")).as("m"))
-      .select(col("m.cid").as("cid"), col("nbr"), col("m.cv").as("cv"))
+    val lists = graft.similarity.Ann.ivfLists(static, cent)
       .localCheckpoint() // the static index the stream probes
     val name = s"ann_ingest_${declaredRuns.incrementAndGet()}"
     withReplayPartitions(spark) {
@@ -990,15 +979,8 @@ object StreamingPipelines {
         .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
         .parquet(src)
         .filter(col("vec_id") % 10 === 0)
-      val zero = struct(lit(Double.MaxValue).as("d"), lit(-1).as("cid"))
-      val routed = arrivals.withColumn("route",
-          aggregate(centArr, zero, (acc, c) => {
-            val d = graft.linalg.Distances.euclidean(col("embedding"), c("cvec"))
-            when(d < acc("d"), struct(d.as("d"), c("cid").as("cid")))
-              .otherwise(acc) // centroids iterate cid-ascending: ties keep the smaller cid
-          }))
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-          col("route.cid").as("cid"))
+      val routed = graft.similarity.Ann.assignToCentroids(arrivals, cent)
+        .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("cid"))
       val cands = routed.join(lists, Seq("cid"))
         .select(col("qid"), col("nbr"),
           round(graft.linalg.Distances.cosineSimilarity(col("qv"), col("cv")), 6)

@@ -307,7 +307,7 @@ class PlanSpecs extends SparkSpec {
   test("q218/q220 centroid assignment: one narrow codegen projection, no join, no shuffle") {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val cent = graft.similarity.Ann.kmeansCentroidsPortable(emb, 8, 2)
-    val df = graft.similarity.IvfIndexStore
+    val df = graft.similarity.Ann
       .assignToCentroids(emb.select("vec_id", "embedding"), cent)
     val p = df.queryExecution.executedPlan.toString
     // round-15: the bounded (nlist-row) quantizer rides task-shipped
@@ -332,9 +332,44 @@ class PlanSpecs extends SparkSpec {
       .groupBy(col("vec_id"))
       .agg(min(col("cand")).as("m"))
       .select(col("vec_id"), col("m.cid").as("cid"))
-    val a = df.select("vec_id", "cid").collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-    val b = joined.collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-    assert(a == b, "expression argmin must equal the join-form argmin")
+    val a = df.select("vec_id", "cid").collect().map(r => (r.getLong(0), r.getInt(1)))
+    val b = joined.collect().map(r => (r.getLong(0), r.getInt(1)))
+    // .toMap alone would hide a repeated row: one row per point each side
+    assert(a.length == b.length && a.length == emb.count(),
+      s"one assignment per point: ${a.length} vs ${b.length}")
+    assert(a.toMap == b.toMap, "expression argmin must equal the join-form argmin")
+  }
+
+  test("every k-means consumer assigns through nearest_centroid_idx: no join, no window, no centroid lambda") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.functions.col
+    import graft.similarity.Ann
+    val emb = Tables.load(spark, sf0001, "embeddings")
+    val pts = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val cent = Ann.kmeansCentroidsPortable(emb, 8, 0)
+    val cents = Ann.collectCentroids(cent)
+    val plans = Seq(
+      "order-free Lloyd's round" -> Ann.kmeansRound(pts, cents),
+      "portable Lloyd's round" -> Ann.kmeansPortableRound(pts, cents),
+      "IVF list build" -> Ann.ivfLists(emb, cent),
+      "q191 static lists" -> Ann.ivfLists(emb.filter(col("vec_id") % 10 =!= 0), cent))
+    plans.foreach { case (name, df) =>
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("nearest_centroid_idx"),
+        s"$name must assign through the codegen argmin:\n$p")
+      assert(!p.contains("Join"), s"$name must not join the centroid table:\n$p")
+      assert(!p.contains("Window"), s"$name must not rank centroids in a window:\n$p")
+    }
+    // the portable round's mean folds are lambdas over its member
+    // array; none may iterate a centroid array (the old interpreted
+    // array_min(transform(cents, ...)) argmin)
+    val overCentroids = Ann.kmeansPortableRound(pts, cents)
+      .queryExecution.analyzed.flatMap(_.expressions).flatMap(_.collect {
+        case h: HigherOrderFunction
+          if h.arguments.exists(_.references.exists(a => a.name == "cents" || a.name == "cvec")) => h
+      })
+    assert(overCentroids.isEmpty,
+      s"portable round iterates the centroid array: $overCentroids")
   }
 
   test("q217 collapse: per-group top-m is the k-min aggregation over the pair stream, not a window") {

@@ -10,6 +10,29 @@ import graft.io.Fvecs
 class UnitSpecs extends AnyFunSuite {
 
   // --- distance (vs hand-computed values; utilities.py:11-13) ---
+  test("Concurrent.awaitAll throws the first failure with the others suppressed, after every thunk ends") {
+    val done = new java.util.concurrent.atomic.AtomicInteger()
+    val e = intercept[IllegalStateException] {
+      Concurrent.awaitAll(Seq(
+        () => throw new IllegalStateException("a"),
+        () => throw new IllegalStateException("b"),
+        () => { Thread.sleep(200); done.incrementAndGet(); () }))
+    }
+    assert(done.get == 1, "awaitAll must join the slow thunk before throwing")
+    assert((e.getMessage +: e.getSuppressed.toSeq.map(_.getMessage)).sorted == Seq("a", "b"))
+  }
+
+  test("Concurrent.awaitAll on an interrupted caller joins every thunk and keeps the interrupt") {
+    val done = new java.util.concurrent.atomic.AtomicInteger()
+    Thread.currentThread().interrupt()
+    try {
+      Concurrent.awaitAll(Seq.fill(2)(() => { Thread.sleep(200); done.incrementAndGet(); () }))
+      assert(done.get == 2, "awaitAll returned while thunks were still running")
+    } finally {
+      assert(Thread.interrupted(), "the caller's interrupt must be re-asserted")
+    }
+  }
+
   test("euclideanLocal matches hand-computed values") {
     import graft.linalg.Distances._
     assert(euclideanLocal(Array(0f, 0f), Array(3f, 4f)) === 5.0)

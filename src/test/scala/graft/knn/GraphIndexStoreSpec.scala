@@ -49,6 +49,25 @@ class GraphIndexStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("disjoint"))
   }
 
+  test("upsert refuses a delta that repeats a vec_id and leaves the index untouched") {
+    val vecs = plantedCorpus(200, 16, clusters = 4, seed = 13L)
+    val base = vecs.filter(col("vec_id") % 5 =!= 4)
+    val delta = vecs.filter(col("vec_id") % 5 === 4)
+    val dir = java.nio.file.Files.createTempDirectory("graft-gis-dupdelta").toString
+    GraphIndexStore.write(base,
+      org.apache.spark.sql.graft.TopKJoin.knn(base, base, 5), dir, k = 5)
+    def state() = (
+      spark.read.parquet(s"$dir/meta").collect()(0).getAs[Long]("n_vectors"),
+      spark.read.parquet(s"$dir/nodes").count(),
+      spark.read.parquet(s"$dir/edges").count())
+    val before = state()
+    val e = intercept[IllegalArgumentException] {
+      GraphIndexStore.upsert(spark, dir, delta.unionByName(delta.limit(1)), k = 5)
+    }
+    assert(e.getMessage.contains("repeats vec_ids"), e.getMessage)
+    assert(state() == before, "a refused upsert must write nothing")
+  }
+
   test("exact upsert equals rebuild on a planted corpus (the q227 contract, locally)") {
     val vecs = plantedCorpus(400, 16, clusters = 8, seed = 13L)
     val base = vecs.filter(col("vec_id") % 4 =!= 3)

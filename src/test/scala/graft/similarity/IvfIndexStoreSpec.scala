@@ -115,6 +115,24 @@ class IvfIndexStoreSpec extends SparkSpec {
       "upsert(base, delta) must equal combined assignment under the base quantizer")
   }
 
+  test("upsert refuses a delta that repeats a vec_id and leaves the index untouched") {
+    val emb = Tables.load(spark, sf0001, "embeddings")
+    val base = emb.filter(col("vec_id") % 4 =!= 3)
+    val delta = emb.filter(col("vec_id") % 4 === 3)
+    val dir = Files.createTempDirectory("graft-ivfidx-dupdelta-")
+    dir.toFile.deleteOnExit()
+    IvfIndexStore.write(base, dir.toString)
+    def state() = (
+      spark.read.parquet(s"$dir/meta").collect()(0).getAs[Long]("n_vectors"),
+      spark.read.parquet(s"$dir/lists").count())
+    val before = state()
+    val e = intercept[IllegalArgumentException] {
+      IvfIndexStore.upsert(spark, dir.toString, delta.unionByName(delta.limit(1)))
+    }
+    assert(e.getMessage.contains("repeats vec_ids"), e.getMessage)
+    assert(state() == before, "a refused upsert must write nothing")
+  }
+
   test("fingerprint chains: fresh for base+delta, stale for either slice alone") {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val base = emb.filter(col("vec_id") % 4 =!= 3)
